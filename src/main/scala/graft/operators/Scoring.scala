@@ -12,13 +12,18 @@ import org.apache.spark.sql.functions._
   *   idf(t)      = ln(1 + (N − df + 0.5) / (df + 0.5))
   *   score(q, d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
   *
-  * Expressed relationally over an exploded postings frame so Catalyst keeps
-  * every stage a two-phase hash aggregate: tf is a partial-aggregated
-  * groupBy, df and the corpus stats are single-row/tiny broadcasts, and the
-  * per-doc sum is map-side combined. At warehouse scale the postings frame
-  * and (N, avgdl, df) stats come precomputed from the split metadata
-  * (IndexingPipeline writes term/postings cardinalities per split) instead
-  * of being derived inline — see [[bm25FromPostings]].
+  * Two forms share the formula ([[weight]]):
+  *
+  *  - the per-row form ([[corpusStats]] + [[score]]) is what `_score`
+  *    search runs, like the reference's leaf collector: (N, Σ dl, df) come
+  *    from ONE aggregate over the searched frame, then each row is scored
+  *    in the pass that reads it, from its own token array — no postings
+  *    frame, no shuffle by doc id, no join back onto the hits;
+  *  - the frame form ([[bm25]], [[bm25FromPostings]]) scores an exploded
+  *    postings frame, every stage a two-phase hash aggregate or broadcast
+  *    join, and yields (doc_id, score) rows for top-k over a whole corpus.
+  *    At warehouse scale the postings come precomputed from the split
+  *    metadata instead of being derived inline — see [[bm25FromPostings]].
   *
   * tantivy quantizes doc length through a lossy byte-encoded fieldnorm
   * before scoring (one byte per doc, ~4% relative error above 40 tokens);
@@ -103,13 +108,70 @@ object Scoring {
     tf.join(broadcast(dfreq), "term")
       .join(dlEff, "doc_id")
       .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("w",
-        col("idf") * (col("tf") * (k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+      .withColumn("w", weight(col("tf"), col("dl"), col("n_docs"), col("df"),
+        col("avgdl"), k1, b))
       .groupBy("doc_id").agg(sum("w").as("score"))
   }
+
+  /** One term's BM25 contribution to one doc — the formula both forms
+    * share: idf(N, df) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)). */
+  private def weight(tf: Column, dl: Column, nDocs: Column, df: Column,
+                     avgdl: Column, k1: Double, b: Double): Column =
+    log(lit(1.0) + (nDocs - df + 0.5) / (df + 0.5)) * (tf * (k1 + 1.0)) /
+      (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / avgdl))
+
+  /** Corpus statistics of one scored text column: N docs with at least one
+    * token, their total length Σ dl, and each query term's df. */
+  final case class FieldStats(field: String, nDocs: Long, sumDl: Long,
+                              df: Seq[(String, Long)])
+
+  /** Per-field statistics plus `hits`, the number of rows on which the
+    * caller's `matching` predicate held — plain values, so a caller can keep
+    * them (a scroll does) without holding any frame. */
+  final case class CorpusStats(fields: Seq[FieldStats], hits: Long)
+
+  /** Everything the per-row [[score]] needs, from ONE aggregate over `docs`:
+    * per `(field, terms)` entry the [[FieldStats]], and the count of rows
+    * where `matching` is true (null counts as false, as in a filter). Each
+    * field is tokenized once per row, with the default analyzer. */
+  def corpusStats(docs: DataFrame, fieldTerms: Seq[(String, Seq[String])],
+                  matching: Column): CorpusStats = {
+    val toks = fieldTerms.indices.map(i => col(s"_tok$i"))
+    val aggs = count_if(col("_hit")) +: fieldTerms.zip(toks).flatMap { case ((_, terms), t) =>
+      Seq(count_if(size(t) > 0), coalesce(sum(size(t)), lit(0L))) ++
+        terms.map(term => count_if(array_contains(t, term)))
+    }
+    val row = docs
+      .select(coalesce(matching, lit(false)).as("_hit") +:
+        fieldTerms.zipWithIndex.map { case ((f, _), i) =>
+          Tokenizers.default(col(f)).as(s"_tok$i")
+        }: _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .head()
+    // the row's values in `aggs` order; constructor arguments and `map`
+    // evaluate left to right
+    val vals = row.toSeq.iterator.map(_.asInstanceOf[Long])
+    val hits = vals.next()
+    CorpusStats(fieldTerms.map { case (f, terms) =>
+      FieldStats(f, vals.next(), vals.next(), terms.map(_ -> vals.next()))
+    }, hits)
+  }
+
+  /** Per-row BM25 `_score` from `stats`: tf and dl read from the row's own
+    * default-analyzer token array of each field, summed over fields and
+    * terms. A row matching no term scores 0.0. Every row is scored as its
+    * own doc, so two rows sharing an id (a multi-index union) never merge. */
+  def score(stats: CorpusStats, k1: Double = DefaultK1, b: Double = DefaultB): Column =
+    stats.fields.flatMap { s =>
+      val toks = Tokenizers.default(col(s.field))
+      val dl = size(toks)
+      val avgdl = lit(s.sumDl.toDouble / s.nDocs)
+      // a term no row holds adds 0 to every score (and with N = 0 none does)
+      s.df.filter(_._2 > 0).map { case (term, df) =>
+        weight(dl - size(array_remove(toks, lit(term))), dl, lit(s.nDocs), lit(df),
+          avgdl, k1, b)
+      }
+    }.reduceOption(_ + _).getOrElse(lit(0.0d))
 
   /** Top-k hits by BM25 score (desc, doc_id asc tie) — `_score` sort. */
   def topKByScore(docs: DataFrame, id: Column, text: Column,

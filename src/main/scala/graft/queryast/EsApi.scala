@@ -60,11 +60,13 @@ object EsApi {
     * es_compatibility scenarios assert on (hits.total.value/relation,
     * hits.hits[]._id/sort/_source, aggregations).
     *
-    * Execution shape: one count aggregate for `total`, one
+    * Execution shape: one aggregate for `total` — for a BM25 `_score`
+    * sort the same aggregate also yields the corpus statistics — then one
     * TakeOrdered-with-offset job for the page of hits (bounded by
-    * from+size — never a full sort materialization), and EsAggs for the
-    * agg tree. `_id` comes from `id`; `_source` is the doc→JSON
-    * back-projection of the frame's columns (to_json of the row struct). */
+    * from+size — never a full sort materialization), which scores each row
+    * it reads, and EsAggs for the agg tree. `_id` comes from `id`;
+    * `_source` is the doc→JSON back-projection of the frame's columns
+    * (to_json of the row struct). */
   def search(df: DataFrame, resolver: FieldResolver, id: Column,
              bodyJson: String): String =
     search(df, resolver, id, bodyJson, cursorOverride = None,
@@ -150,21 +152,23 @@ object EsApi {
   /** A rendered page plus the NATIVE machinery the scroll context needs:
     * the last hit's raw sort values (full i64/timestamp precision — a
     * JSON re-parse would collapse longs beyond 2^53 to doubles), the
-    * page's total, and — when the page ranked by BM25 — the (doc_id,
-    * score) frame, so a scroll can materialize the expensive corpus
-    * aggregate once instead of per continuation. */
+    * page's total, and — when the page ranked by BM25 — the corpus
+    * statistics it scored with, so a scroll scores every continuation with
+    * the stats of its first page and never re-aggregates the corpus. */
   final case class Page(rendered: String, lastSortValues: Option[Seq[Any]],
-                        total: Long, scores: Option[DataFrame] = None)
+                        total: Long,
+                        stats: Option[graft.operators.Scoring.CorpusStats] = None)
 
   def searchPage(df: DataFrame, resolver: FieldResolver, id: Column,
                  bodyJson: String, cursorOverride: Option[Seq[Any]],
                  extraSort: Seq[(String, Boolean)],
                  includeAggs: Boolean,
                  totalOverride: Option[Long] = None,
-                 scoresOverride: Option[DataFrame] = None): Page = {
+                 statsOverride: Option[graft.operators.Scoring.CorpusStats] = None): Page = {
     val m = graft.util.Json.parse(bodyJson).asInstanceOf[Map[String, Any]]
     val astOpt = m.get("query").map(q => EsDsl.fromParsed(q, resolver.defaultFields))
-    val filtered = astOpt.map(a => df.filter(a.toColumn(resolver))).getOrElse(df)
+    val predOpt = astOpt.map(_.toColumn(resolver))
+    val filtered = predOpt.map(df.filter).getOrElse(df)
     val size = m.get("size").map(_.asInstanceOf[Double].toInt).getOrElse(10)
     // a cursor resume and an offset are mutually exclusive — ES rejects a
     // body carrying both with a 400; scroll continuations force from = 0
@@ -194,39 +198,38 @@ object EsApi {
     // (df, avgdl, N) come from the WHOLE index frame, not the filtered
     // subset, matching tantivy's segment-level stats; docs matching only
     // filter clauses score 0.0; a term-free query (match_all / pure
-    // structural predicates) keeps the ES constant_score of 1.0.
+    // structural predicates) keeps the ES constant_score of 1.0. Like the
+    // reference's leaf collector, each hit is scored in the pass that reads
+    // it: one aggregate over the index frame yields the stats AND the hit
+    // total, then the page job scores every row it reads. A page of size 0
+    // ranks nothing, so it needs no stats.
     val needsScore = sortSpec.exists(_._1 == "_score")
     val scoreTerms =
       if (needsScore) astOpt.map(QueryAst.scoringTerms).getOrElse(Nil).distinct else Nil
-    val ScoreCol = "_bm25_score"
-    val scoresFrame: Option[DataFrame] =
-      if (scoreTerms.isEmpty) None
-      else scoresOverride.orElse {
-        val perField = scoreTerms.groupBy(_._1).toSeq.sortBy(_._1).map { case (f, ts) =>
-          graft.operators.Scoring.bm25(df, id, col(f), ts.map(_._2))
-        }
-        Some(perField.reduce(_ union _)
-          .groupBy("doc_id").agg(sum("score").as(ScoreCol))
-          .withColumnRenamed("doc_id", "_score_join_id"))
+    val stats: Option[graft.operators.Scoring.CorpusStats] =
+      if (scoreTerms.isEmpty || size == 0) None
+      else statsOverride.orElse {
+        val fieldTerms = scoreTerms.groupBy(_._1).toSeq.sortBy(_._1)
+          .map { case (f, ts) => f -> ts.map(_._2) }
+        Some(graft.operators.Scoring.corpusStats(df, fieldTerms,
+          predOpt.getOrElse(lit(true))))
       }
-    val pageBase = scoresFrame match {
-      case None => filtered
-      case Some(scores) =>
-        filtered.join(scores, id === col("_score_join_id"), "left")
-          .drop("_score_join_id")
-          .withColumn(ScoreCol, coalesce(col(ScoreCol), lit(0.0d)))
-    }
+    val ScoreCol = "_bm25_score"
+    val pageBase = stats.fold(filtered)(st =>
+      filtered.withColumn(ScoreCol, graft.operators.Scoring.score(st)))
     def sortCol(f: String): Column =
-      if (f == "_score") { if (scoreTerms.nonEmpty) col(ScoreCol) else lit(1.0d) }
+      if (f == "_score") { if (stats.isDefined) col(ScoreCol) else lit(1.0d) }
       else col(f)
 
     // ES total counts ALL matches, cursor-independent; the scroll context
-    // fixes it at open time and passes it back per continuation. The whole
-    // POINT of track_total_hits:false is skipping this count job — don't
-    // run it just to discard the result.
+    // fixes it at open time and passes it back per continuation. The stats
+    // row already carries it (counted over the same frame and predicate);
+    // otherwise it is a count job. The whole POINT of track_total_hits:false
+    // is skipping that count job — don't run it just to discard the result.
     val wantTotal = m.get("track_total_hits") != Some(false)
     val total =
-      if (wantTotal) totalOverride.getOrElse(filtered.count()) else -1L
+      if (wantTotal) totalOverride.orElse(stats.map(_.hits)).getOrElse(filtered.count())
+      else -1L
     // A cursor value echoed from hits[].sort must be re-typed by the SORT
     // COLUMN's type: date sort values travel as epoch millis on the wire
     // (svJson), so a numeric cursor against a timestamp column is millis,
@@ -333,7 +336,7 @@ object EsApi {
     val hitsBlock =
       s""""hits":{$totalBlock"hits":[${hitsJson.mkString(",")}]}"""
     Page(s"""{"timed_out":false,$hitsBlock${aggsJson.map("," + _).getOrElse("")}}""",
-      lastSv, total, scoresFrame)
+      lastSv, total, stats)
   }
 
   /** `GET /_elastic` cluster-info banner — the version probe ES clients

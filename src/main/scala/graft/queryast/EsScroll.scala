@@ -1,5 +1,6 @@
 package graft.queryast
 
+import graft.operators.Scoring
 import org.apache.spark.sql.{Column, DataFrame}
 import scala.collection.concurrent.TrieMap
 
@@ -58,12 +59,11 @@ object EsScroll {
     * scroll state into a cluster KV (`ClusterClient::put_kv`,
     * scroll_context.rs:128-150) precisely so searchers stay STATELESS —
     * any node can serve the continuation. The Spark analog of that shape
-    * would persist (bodyJson, cursor, total) — all plain values — into a
-    * shared store keyed by scroll id; the DataFrame itself is rebuilt per
-    * continuation from the table, not shipped (the node-local BM25 score
-    * cache would likewise be recomputed by whichever node serves the
-    * continuation, or carried as the reference carries its cached
-    * window). */
+    * would persist (bodyJson, cursor, total, BM25 corpus stats) — all
+    * plain values — into a shared store keyed by scroll id; the DataFrame
+    * itself is rebuilt per continuation from the table, not shipped. No
+    * state holds cached blocks, so dropping a context frees everything it
+    * used. */
   final class Context(clock: () => Long = () => System.currentTimeMillis(),
                       capacity: Int = DefaultCapacity,
                       sweepIntervalMs: Option[Long] = None) {
@@ -76,7 +76,7 @@ object EsScroll {
                                    bodyJson: String,
                                    cursor: Option[Seq[Any]],
                                    total: Long,
-                                   scores: Option[DataFrame],
+                                   stats: Option[Scoring.CorpusStats],
                                    // the tiebreak sort that made this
                                    // scroll's cursor a TOTAL order — the
                                    // continuation must replay it verbatim
@@ -152,14 +152,12 @@ object EsScroll {
       val idCol = org.apache.spark.sql.functions.col(idField)
       val page = EsApi.searchPage(df, resolver, idCol, bodyJson,
         cursorOverride = None, extraSort = tiebreak, includeAggs = true)
-      // A BM25-ranked scroll materializes the corpus score aggregate ONCE
-      // here (eager localCheckpoint): replaying it per continuation would
-      // re-tokenize the whole index for every size-N page. This is a
-      // node-local twin of the reference's cached scroll window.
-      val cachedScores = page.scores.map(_.localCheckpoint())
+      // A BM25-ranked scroll keeps the corpus stats of its first page:
+      // continuations score with them and run no aggregate, so every page
+      // ranks by the same scores.
       val sid = java.util.UUID.randomUUID().toString
       register(sid, State(Some(df), resolver, idCol, idField, bodyJson,
-        page.lastSortValues, page.total, cachedScores, tiebreak,
+        page.lastSortValues, page.total, page.stats, tiebreak,
         clock() + ttlMs, ttlMs, clock()))
       splice(sid, page.rendered)
     }
@@ -195,7 +193,8 @@ object EsScroll {
     }
 
     /** `_search/scroll` continuation: one bounded TakeOrdered job per page
-      * (the total is the one fixed at open — no per-page count job).
+      * (the total and any BM25 stats are the ones fixed at open — no
+      * per-page count or stats aggregate).
       * Unknown/expired ids get the reference-shaped failure. The
       * window-CACHED variant of this machinery (serve many tiny pages per
       * refill, scroll_context.rs's batch shape) is
@@ -213,7 +212,7 @@ object EsScroll {
         case Some(df) => EsApi.searchPage(df, st.resolver, st.idCol, st.bodyJson,
           cursorOverride = st.cursor, extraSort = st.tiebreak,
           includeAggs = false, totalOverride = Some(st.total),
-          scoresOverride = st.scores)
+          statsOverride = st.stats)
         case None => EsApi.emptyPage(st.bodyJson) // zero-index scroll
       }
       register(scrollId,

@@ -8,10 +8,12 @@ import org.apache.spark.sql.functions._
   * compiled to a Spark `Column` predicate instead of a tantivy query.
   * These nodes FILTER; relevance ranking (`_score` sort) lives in
   * [[graft.operators.Scoring]] (Lucene-variant BM25 over the same default
-  * tokenizer), applied downstream of the predicate. One documented scoring
-  * divergence: tantivy quantizes doc length through a lossy byte fieldnorm
-  * before scoring, while Scoring.bm25 uses the exact length — scores can
-  * differ in the 3rd decimal, ordering almost always identical.
+  * tokenizer): `_score` search scores each filtered row by
+  * [[graft.operators.Scoring.score]] from corpus stats aggregated over the
+  * index frame, with [[scoringTerms]] as the query terms. One documented
+  * scoring divergence: tantivy quantizes doc length through a lossy byte
+  * fieldnorm before scoring, while Scoring uses the exact length — scores
+  * can differ in the 3rd decimal, ordering almost always identical.
   */
 sealed trait QueryAst {
   def toColumn(schema: FieldResolver): Column

@@ -1,6 +1,8 @@
 package graft.queryast
 
 import graft.SparkTestBase
+import graft.operators.Scoring
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ES serve-layer shells: response shapes + msearch single-scan batching
@@ -538,5 +540,168 @@ class EsApiSpec extends SparkTestBase {
     val third = run(
       s"""{"size": 1, "sort": [{"ts": "desc"}], "search_after": [${next.head("sort").asInstanceOf[Seq[Any]].head}]}""")
     assert(third.map(_("_id")) === Seq(1.0))
+  }
+
+  // ---- per-row `_score` against the frame form ---------------------------
+
+  /** `Scoring.bm25` (the exploded-postings frame form) per field over the
+    * whole index frame, summed per doc — the reference `_score` values. */
+  private def frameScores(df: DataFrame, fieldTerms: Seq[(String, Seq[String])]): Map[Long, Double] =
+    fieldTerms.map { case (f, ts) => Scoring.bm25(df, col("doc_id"), col(f), ts) }
+      .reduce(_ union _).groupBy("doc_id").agg(sum("score"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  private def close(a: Double, b: Double): Boolean =
+    math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b))
+
+  /** Runs `body` and checks its hits against the frame form: every hit's
+    * `_score` equals the frame score of its doc, the scores are the
+    * `[from, from + size)` slice of all matching docs' frame scores in
+    * descending order, and the total is `filtered.count()` of the
+    * engine's own predicate. Returns the parsed `hits` block. */
+  private def assertFrameEquivalent(df: DataFrame, res: FieldResolver, body: String,
+                                    fieldTerms: Seq[(String, Seq[String])],
+                                    from: Int, size: Int): Map[String, Any] = {
+    val hitsBlock = graft.util.Json.parse(EsApi.search(df, res, col("doc_id"), body))
+      .asInstanceOf[Map[String, Any]]("hits").asInstanceOf[Map[String, Any]]
+    val hs = hitsBlock("hits").asInstanceOf[Seq[Any]].map(_.asInstanceOf[Map[String, Any]])
+    val frame = frameScores(df, fieldTerms)
+    val query = graft.util.Json.parse(body).asInstanceOf[Map[String, Any]]("query")
+    val filtered = df.filter(EsDsl.fromParsed(query, res.defaultFields).toColumn(res))
+    val matched = filtered.select("doc_id").collect().map(_.getLong(0)).toSeq
+    val want = matched.map(frame.getOrElse(_, 0.0)).sorted(Ordering[Double].reverse)
+      .slice(from, from + size)
+    val got = hs.map(h => (h("_id").asInstanceOf[Double].toLong,
+      h("sort").asInstanceOf[Seq[Any]].head.asInstanceOf[Double]))
+    assert(got.size === want.size, s"hits $got want $want")
+    got.zip(want).foreach { case ((id, s), w) =>
+      assert(close(s, frame.getOrElse(id, 0.0)), s"doc $id: _score $s frame ${frame.get(id)}")
+      assert(close(s, w), s"doc $id: _score $s, want $w at its rank")
+    }
+    hitsBlock.get("total").foreach { t =>
+      val n = filtered.count()
+      assert(t === Map("value" -> n.toDouble, "relation" -> "eq") ||
+        t.asInstanceOf[Map[String, Any]]("relation") == "gte")
+    }
+    hitsBlock
+  }
+
+  private def scoredCorpus = {
+    import spark.implicits._
+    Seq(
+      (1L, "spark vector", "spark joins", "en"),
+      (2L, "spark is one term here diluted by many other words", "vector search", "en"),
+      (3L, "spark hit", "nothing", "de"),
+      (4L, "nothing relevant", "spark spark spark", "en"),
+      (5L, "vector search engine", "short", "en"),
+      (6L, null, "spark vector search", null),
+      (7L, "plain words only", null, "en")
+    ).toDF("doc_id", "text", "body", "lang")
+  }
+
+  test("_score over two default text fields equals the frame form (query_string)") {
+    val res = FieldResolver(Set("text", "body"), Seq("text", "body"))
+    val both = Seq("body" -> Seq("spark", "vector"), "text" -> Seq("spark", "vector"))
+    // docs 4 and 6 match through `body` alone, doc 3 through `text` alone
+    val h = assertFrameEquivalent(scoredCorpus, res,
+      """{"query": {"query_string": {"query": "spark vector"}}, "size": 10}""",
+      both, from = 0, size = 10)
+    assert(h("total") === Map("value" -> 6.0, "relation" -> "eq"))
+  }
+
+  test("_score with a non-scoring filter clause equals the frame form") {
+    val h = assertFrameEquivalent(scoredCorpus, resolver,
+      """{"query": {"bool": {
+        |  "must": [{"match": {"text": "spark vector"}}],
+        |  "filter": [{"term": {"lang": "en"}}]}},
+        | "sort": ["_score"], "size": 10}""".stripMargin,
+      Seq("text" -> Seq("spark", "vector")), from = 0, size = 10)
+    assert(h("total") === Map("value" -> 3.0, "relation" -> "eq"))
+  }
+
+  test("_score with must_not over a null text: total is filtered.count(), scores equal the frame form") {
+    val body =
+      """{"query": {"bool": {
+        |  "should": [{"match": {"body": "spark"}}],
+        |  "must_not": [{"match_phrase": {"text": "vector search"}}]}},
+        | "size": 10}""".stripMargin
+    val res = FieldResolver(Set("text", "body"), Seq("text"))
+    // the predicate is NULL on doc 6 (null text under the phrase gate), so
+    // the total must treat null as "no match", exactly like the filter
+    val pred = EsDsl.parse(
+      """{"bool": {"should": [{"match": {"body": "spark"}}],
+        |  "must_not": [{"match_phrase": {"text": "vector search"}}]}}""".stripMargin)
+      .toColumn(res)
+    assert(scoredCorpus.filter(pred.isNull).count() === 1L)
+    val h = assertFrameEquivalent(scoredCorpus, res, body,
+      Seq("body" -> Seq("spark")), from = 0, size = 10)
+    assert(h("total") === Map("value" -> scoredCorpus.filter(pred).count().toDouble,
+      "relation" -> "eq"))
+  }
+
+  test("_score pages with from/size offsets equal the frame form") {
+    val q = """"query": {"match": {"text": {"query": "spark vector", "operator": "or"}}}"""
+    for ((from, size) <- Seq((0, 2), (1, 2), (2, 3), (4, 5))) {
+      val h = assertFrameEquivalent(scoredCorpus, resolver,
+        s"""{$q, "from": $from, "size": $size}""",
+        Seq("text" -> Seq("spark", "vector")), from, size)
+      assert(h("total") === Map("value" -> 4.0, "relation" -> "eq"))
+    }
+  }
+
+  test("_score with body search_after: next page equals the frame form, total cursor-independent") {
+    val q = """"query": {"match": {"text": {"query": "spark vector", "operator": "or"}}}"""
+    val sort = """"sort": [{"_score": "desc"}, {"doc_id": "asc"}]"""
+    val first = assertFrameEquivalent(scoredCorpus, resolver, s"""{$q, $sort, "size": 2}""",
+      Seq("text" -> Seq("spark", "vector")), 0, 2)
+    val cursor = first("hits").asInstanceOf[Seq[Map[String, Any]]].last("sort")
+      .asInstanceOf[Seq[Any]].mkString("[", ",", "]")
+    val next = graft.util.Json.parse(EsApi.search(scoredCorpus, resolver, col("doc_id"),
+      s"""{$q, $sort, "size": 2, "search_after": $cursor}"""))
+      .asInstanceOf[Map[String, Any]]("hits").asInstanceOf[Map[String, Any]]
+    assert(next("total") === first("total"))
+    val frame = frameScores(scoredCorpus, Seq("text" -> Seq("spark", "vector")))
+    val want = frame.toSeq.sortBy { case (id, s) => (-s, id) }.slice(2, 4)
+    val got = next("hits").asInstanceOf[Seq[Map[String, Any]]].map(h =>
+      h("_id").asInstanceOf[Double].toLong ->
+        h("sort").asInstanceOf[Seq[Any]].head.asInstanceOf[Double])
+    assert(got.map(_._1) === want.map(_._1))
+    got.zip(want).foreach { case ((_, g), (_, w)) => assert(close(g, w)) }
+  }
+
+  test("_score with track_total_hits false and an integer cap equals the frame form") {
+    val q = """"query": {"match": {"text": {"query": "spark vector", "operator": "or"}}}"""
+    val terms = Seq("text" -> Seq("spark", "vector"))
+    val off = assertFrameEquivalent(scoredCorpus, resolver,
+      s"""{$q, "size": 3, "track_total_hits": false}""", terms, 0, 3)
+    assert(!off.contains("total"))
+    val capped = assertFrameEquivalent(scoredCorpus, resolver,
+      s"""{$q, "size": 3, "track_total_hits": 2}""", terms, 0, 3)
+    assert(capped("total") === Map("value" -> 2.0, "relation" -> "gte"))
+    val uncapped = assertFrameEquivalent(scoredCorpus, resolver,
+      s"""{$q, "size": 3, "track_total_hits": 10}""", terms, 0, 3)
+    assert(uncapped("total") === Map("value" -> 4.0, "relation" -> "eq"))
+  }
+
+  test("_score over a multi-index union scores docs sharing an _id separately") {
+    import spark.implicits._
+    val ixA = Seq((1L, "spark spark spark", "en"), (2L, "nothing here", "en")).toDF("doc_id", "text", "lang")
+    val ixB = Seq((1L, "spark and many many other words here", "en"), (3L, "vector search", "en"))
+      .toDF("doc_id", "text", "lang")
+    val got = graft.util.Json.parse(EsApi.searchMulti(Seq("ix-a" -> ixA, "ix-b" -> ixB),
+      resolver, col("doc_id"), "ix-*", """{"query": {"match": {"text": "spark"}}, "size": 10}"""))
+      .asInstanceOf[Map[String, Any]]("hits").asInstanceOf[Map[String, Any]]
+    assert(got("total") === Map("value" -> 2.0, "relation" -> "eq"))
+    val hs = got("hits").asInstanceOf[Seq[Map[String, Any]]]
+      .map(h => h("_index") -> h("sort").asInstanceOf[Seq[Any]].head.asInstanceOf[Double])
+    // four docs, each with ≥1 token: N = 4, avgdl = (3 + 2 + 7 + 2) / 4,
+    // df(spark) = 2 — the two doc_id 1 rows are two docs
+    def bm25(tf: Int, dl: Int): Double = {
+      val idf = math.log(1.0 + (4 - 2 + 0.5) / (2 + 0.5))
+      idf * tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / 3.5))
+    }
+    assert(hs.map(_._1) === Seq("ix-a", "ix-b"))
+    assert(close(hs(0)._2, bm25(3, 3)), s"ix-a: ${hs(0)._2} want ${bm25(3, 3)}")
+    assert(close(hs(1)._2, bm25(1, 7)), s"ix-b: ${hs(1)._2} want ${bm25(1, 7)}")
   }
 }

@@ -73,8 +73,8 @@ class EsScrollSpec extends SparkTestBase {
       (4L, "nothing relevant")                                    // filtered out
     ).toDF("id", "name")
     val ctx = new EsScroll.Context()
-    // sortless body → default _score desc; the context materializes the
-    // score aggregate ONCE at open, continuations page from the cursor
+    // sortless body → default _score desc; the context keeps the corpus
+    // stats of the opening page, continuations page from the cursor
     val r1 = parsed(ctx.search(corpus, resolver, "id",
       """{"query":{"match":{"name":{"query":"spark vector","operator":"or"}}},"size":1}""",
       "30m"))
@@ -260,5 +260,99 @@ class EsScrollSpec extends SparkTestBase {
     val deadline = System.currentTimeMillis() + 5000
     while (ctx.size > 0 && System.currentTimeMillis() < deadline) Thread.sleep(10)
     assert(ctx.size === 0, "daemon sweeper should purge without any API call")
+  }
+
+  /** Runs `body` under a fresh job group and returns how many Spark jobs it
+    * ran. The status store is fed in order by the listener bus, so once a
+    * later marker job shows as finished, every job of the group is in it. */
+  private def jobsRunBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    def inGroup[R](g: String)(f: => R): R = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val out = inGroup(group)(body)
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    inGroup(marker)(sc.parallelize(Seq(1), 1).count())
+    def markerDone: Boolean = sc.statusTracker.getJobIdsForGroup(marker).exists(id =>
+      sc.statusTracker.getJobInfo(id).exists(_.status == org.apache.spark.JobExecutionStatus.SUCCEEDED))
+    val deadline = System.currentTimeMillis() + 10000
+    while (!markerDone && System.currentTimeMillis() < deadline) Thread.sleep(10)
+    assert(markerDone, "marker job never reached the status store")
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  /** Storage memory in use across the block managers. */
+  private def storageUsed(): Long =
+    spark.sparkContext.getExecutorMemoryStatus.values.map { case (max, free) => max - free }.sum
+
+  /** Storage memory in use once the context cleaner has dropped what is no
+    * longer reachable (task-binary broadcasts of finished jobs), polled
+    * until it is at most `atMost` or 20 s pass. */
+  private def settledStorageUsed(atMost: Long): Long = {
+    val deadline = System.currentTimeMillis() + 20000
+    var used = storageUsed()
+    while (used > atMost && System.currentTimeMillis() < deadline) {
+      System.gc()
+      Thread.sleep(100)
+      used = storageUsed()
+    }
+    used
+  }
+
+  test("a BM25 scroll holds no cached blocks: expiry, LRU eviction and close release everything") {
+    import spark.implicits._
+    val corpus = Seq(
+      (1L, "spark vector"),
+      (2L, "spark is one term here diluted by many other words"),
+      (3L, "spark hit"),
+      (4L, "nothing relevant")
+    ).toDF("id", "name")
+    val body = """{"query":{"match":{"name":{"query":"spark vector","operator":"or"}}},"size":1}"""
+    val sc = spark.sparkContext
+    System.gc()
+    Thread.sleep(200)
+    val rddsBefore = sc.getRDDStorageInfo.map(_.id).toSet
+    val storageBefore = storageUsed()
+    def assertReleased(when: String): Unit = {
+      assert(sc.getRDDStorageInfo.map(_.id).toSet === rddsBefore, s"RDD blocks left $when")
+      val used = settledStorageUsed(storageBefore)
+      assert(used <= storageBefore, s"storage memory $used > $storageBefore $when")
+    }
+    var now = 0L
+    val ctx = new EsScroll.Context(clock = () => now, capacity = 1)
+
+    // an open scroll holds no blocks either; continuations reuse the stats
+    // of the first page: one page job each, no aggregate
+    val (r1, openJobs) = jobsRunBy(parsed(ctx.search(corpus, resolver, "id", body, "60s")))
+    val sid = r1("_scroll_id").asInstanceOf[String]
+    val (r2, nextJobs) = jobsRunBy(parsed(ctx.scroll(sid)))
+    assert(nextJobs === 1, s"a continuation ran $nextJobs jobs")
+    assert(openJobs > nextJobs)
+    assert((hits(r1) ++ hits(r2)).map(_("_id")) === Seq(1.0, 3.0))
+    assert(sc.getRDDStorageInfo.map(_.id).toSet === rddsBefore)
+
+    // TTL expiry
+    now = 61000L
+    ctx.purgeExpired()
+    assert(ctx.size === 0)
+    assertReleased("after expiry")
+
+    // LRU eviction (capacity 1: the second open evicts the first)
+    val first = parsed(ctx.search(corpus, resolver, "id", body, "60s"))("_scroll_id")
+      .asInstanceOf[String]
+    ctx.scroll(first)
+    now += 1000
+    val second = parsed(ctx.search(corpus, resolver, "id", body, "60s"))("_scroll_id")
+      .asInstanceOf[String]
+    intercept[IllegalArgumentException](ctx.scroll(first))
+    assert(ctx.size === 1)
+
+    // close drops the survivor
+    ctx.scroll(second)
+    ctx.close()
+    assert(ctx.size === 0)
+    assertReleased("after eviction and close")
   }
 }
